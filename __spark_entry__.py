@@ -7,125 +7,25 @@ every implemented operator from SURVEY.md §2 for the DuckDB correctness gate.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_toolkit_spark.multimodal import binary_ops as multimodal
-from big_data_toolkit_spark.operators import (
-    analytics_ext,
-    curation,
-    dedup,
-    inverted_index,
-    pagerank,
-    quality,
-    relational_ext,
-    similarity,
-    spam,
-    sql_analytics,
-    text_analytics,
-)
-from big_data_toolkit_spark.plans import materialize, scale
-from big_data_toolkit_spark.streaming import anomaly as streaming_anomaly
-from big_data_toolkit_spark.streaming import windows as streaming_windows
-
-_MODULES = [
-    sql_analytics,
-    text_analytics,
-    inverted_index,
-    spam,
-    pagerank,
-    streaming_windows,
-    streaming_anomaly,
-    dedup,
-    similarity,
-    quality,
-    relational_ext,
-    analytics_ext,
-    multimodal,
-    curation,
-    scale,
-    materialize,
-]
+from big_data_toolkit_spark import registry
+from big_data_toolkit_spark.operators import sql_analytics
 
 
 # The driver's correctness gate records rows for the FIRST 50 queries in
 # dict-insertion order (observed: CORRECTNESS keys == queries()[:50] every
 # round).  Coverage rotates so no query's newest driver row goes stale.
-# Round-13 rotation (re-emitted by `scripts/plan_rotation.py` after
-# CORRECTNESS_r12.json landed 45 hash-green + 5 rows-only-by-design).
-# Priority per the recorded evidence: (1) no red rows to retry; (2) the
-# four never-rowed queries get their FIRST driver rows — `sequence_pack`
-# (r12 closing amendment, verdict item 5) plus the round-13 additions
-# `pmi_stripes`, `bigram_relfreq_stripes` and `mat_manifest_compact`; (3) staleness refreshes,
-# oldest newest-row first: the 29 r9-rowed queries (they hit the age-4
-# bound this round) plus 18 of the r10-rowed ones.  The gate bound is
-# period-aware with a hard cap (`scripts/plan_rotation.py:max_row_age`,
-# ADVICE r11): allowed age = min(max(3, ceil(registry/50)), 5) = 4 at
-# 182 registered queries (the r13 closing amendment registered the
-# 182nd; the rotation math is unchanged).  `--check --project 4`
-# verifies the r13-r17 projections clean.
+# Round-15 rotation (re-emitted by `scripts/plan_rotation.py` after
+# CORRECTNESS_r14.json landed 50 hash-green rows).  Priority per the
+# recorded evidence: (1) no red rows to retry; (2) no never-rowed queries;
+# (3) staleness refreshes, oldest newest-row first: the 33 r10-rowed
+# queries (they would reach age 5 at r15, past the bound) plus the first
+# 17 of the 49 r11-rowed ones in registry order.  The gate bound is
+# period-aware with a hard cap (`scripts/plan_rotation.py:max_row_age`):
+# allowed age = min(max(3, ceil(registry/50)), 5) = 4 at 182 registered
+# queries.  `--check --project 4` verifies the r15-r19 projections clean.
 _HEAD = [
-    "pmi_stripes",
-    "sequence_pack",
-    "mat_manifest_compact",
-    "bigram_relfreq_stripes",
-    "ranked_retrieval_bm25",
-    "span_dedup",
-    "semantic_dedup",
-    "dsir_weights",
-    "hybrid_retrieval",
-    "triangle_count",
-    "bigram_logprob",
-    "event_funnel",
-    "q1_count_shipped",
-    "q2_orders_shipped",
-    "q3_part_supplier_shipped",
-    "q4_orders_by_nation",
-    "word_count",
-    "next_word_after",
-    "bigram_relative_frequency",
-    "pmi_pairs",
-    "inverted_index",
-    "boolean_and",
-    "boolean_or",
-    "boolean_mixed",
-    "spam_score",
-    "spam_ensemble",
-    "pagerank_top20",
-    "region_event_count",
-    "trending_events",
-    "dedup_minhash_lsh",
-    "simhash_fingerprints",
-    "dedup_simhash",
-    "dedup_embedding_lsh",
-    "ann_pq_incremental",
-    "audio_spectral_features",
-    "dedup_incremental_bloom_sharded",
-    "knn_ivfpq",
-    "knn_join_pq",
-    "events_gapfill_locf",
-    "leakage_safe_split",
-    "dedup_keep_canonical",
-    "knn_brute_force",
-    "quality_score",
-    "asof_purchase_attribution",
-    "error_bursts",
-    "top_orders_per_priority",
-    "lineitem_stats",
-    "event_count_sliding",
-    "user_sessions",
-    "curated_corpus",
-]
-
-# Deferred queries, ordered by staleness (newest driver row round ascending,
-# registry order) — the r12 refresh priority order.  Every deferred query
-# remains registered and pytest-oracle-covered (tests/oracle_utils.compare
-# replicates the driver's comparison, including its typed-value hash
-# sensitivity via the no-HUGEINT/DECIMAL-mismatch guard).  Queries added
-# mid-round and absent from both lists fall to the very tail (the never-rowed
-# queue, which plan_rotation prioritizes ahead of refreshes).
-_DEFERRED = [
     "customers_without_orders",
     "daily_activity_full",
     "never_ordered_parts",
@@ -176,6 +76,16 @@ _DEFERRED = [
     "multimodal_meta",
     "video_frame_sample",
     "hash_sample",
+]
+
+# Deferred queries, ordered by staleness (newest driver row round ascending,
+# registry order) — the refresh priority order.  Every deferred query
+# remains registered and pytest-oracle-covered (tests/oracle_utils.compare
+# replicates the driver's comparison, including its typed-value hash
+# sensitivity via the no-HUGEINT/DECIMAL-mismatch guard).  Queries added
+# mid-round and absent from both lists fall to the very tail (the never-rowed
+# queue, which plan_rotation prioritizes ahead of refreshes).
+_DEFERRED = [
     "stratified_sample",
     "source_mix",
     "temperature_mix",
@@ -258,6 +168,56 @@ _DEFERRED = [
     "text_clean",
     "pii_redaction",
     "knn_ivf_trained",
+    "pmi_stripes",
+    "sequence_pack",
+    "mat_manifest_compact",
+    "bigram_relfreq_stripes",
+    "ranked_retrieval_bm25",
+    "span_dedup",
+    "semantic_dedup",
+    "dsir_weights",
+    "hybrid_retrieval",
+    "triangle_count",
+    "bigram_logprob",
+    "event_funnel",
+    "q1_count_shipped",
+    "q2_orders_shipped",
+    "q3_part_supplier_shipped",
+    "q4_orders_by_nation",
+    "word_count",
+    "next_word_after",
+    "bigram_relative_frequency",
+    "pmi_pairs",
+    "inverted_index",
+    "boolean_and",
+    "boolean_or",
+    "boolean_mixed",
+    "spam_score",
+    "spam_ensemble",
+    "pagerank_top20",
+    "region_event_count",
+    "trending_events",
+    "dedup_minhash_lsh",
+    "simhash_fingerprints",
+    "dedup_simhash",
+    "dedup_embedding_lsh",
+    "ann_pq_incremental",
+    "audio_spectral_features",
+    "dedup_incremental_bloom_sharded",
+    "knn_ivfpq",
+    "knn_join_pq",
+    "events_gapfill_locf",
+    "leakage_safe_split",
+    "dedup_keep_canonical",
+    "knn_brute_force",
+    "quality_score",
+    "asof_purchase_attribution",
+    "error_bursts",
+    "top_orders_per_priority",
+    "lineitem_stats",
+    "event_count_sliding",
+    "user_sessions",
+    "curated_corpus",
 ]
 
 
@@ -273,15 +233,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return sql_analytics.q4_orders_by_nation(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    return _ordered(out)
+def queries() -> dict[str, registry.Query]:
+    return _ordered(registry.queries())
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLE_SQL)
-    return _ordered(out)
+    return _ordered(registry.oracle_sql())

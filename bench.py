@@ -19,269 +19,44 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from big_data_toolkit_spark.operators import (  # noqa: E402
-    analytics_ext,
-    curation,
-    dedup,
-    inverted_index,
-    pagerank,
-    quality,
-    relational_ext,
-    similarity,
-    spam,
-    sql_analytics,
-    text_analytics,
-)
-from big_data_toolkit_spark.multimodal import binary_ops as multimodal  # noqa: E402
-from big_data_toolkit_spark.plans import materialize, scale  # noqa: E402
+from big_data_toolkit_spark import registry  # noqa: E402
+from big_data_toolkit_spark.plans import materialize  # noqa: E402
 from big_data_toolkit_spark.session import build_spark  # noqa: E402
-from big_data_toolkit_spark.streaming import anomaly as streaming_anomaly
-from big_data_toolkit_spark.streaming import windows as streaming_windows  # noqa: E402
 
-HEADLINE = {
-    "q1": sql_analytics.q1_count_shipped,
-    "q2": sql_analytics.q2_orders_shipped,
-    "q3": sql_analytics.q3_part_supplier_shipped,
-    "q4": sql_analytics.q4_orders_by_nation,
-    "word_count": text_analytics.word_count,
-    "bigram_relfreq": text_analytics.bigram_relative_frequency,
-    "pmi_pairs": text_analytics.pmi_pairs,
-    "pmi_stripes": text_analytics.pmi_stripes_serialized,
-    "bigram_relfreq_stripes": text_analytics.bigram_relfreq_stripes_serialized,
-    "inverted_index": inverted_index.postings,
-    "boolean_mixed": inverted_index.boolean_mixed,
-    "ranked_tfidf": inverted_index.ranked_retrieval_tfidf,
-    "spam_score": spam.spam_score,
-    "spam_ensemble": spam.spam_ensemble,
-    "pagerank": pagerank.pagerank_top20,
-    "event_count_hourly": streaming_windows.event_count_hourly,
-    "region_event_count": streaming_windows.region_event_count,
-    "trending_events": streaming_windows.trending_events,
-    "dedup_exact": dedup.dedup_exact,
-    "dedup_incremental": dedup.dedup_incremental,
-    "dedup_incremental_bloom": dedup.dedup_incremental_bloom,
-    "dedup_incremental_bloom_sharded": dedup.dedup_incremental_bloom_sharded,
-    "leakage_safe_split": dedup.leakage_safe_split,
-    "dedup_keep_canonical": dedup.dedup_keep_canonical,
-    "dedup_keep_best": dedup.dedup_keep_best,
-    "training_manifest": curation.training_manifest,
-    "manifest_ingest_delta": curation.manifest_ingest_delta,
-    "manifest_compact": curation.manifest_compact,
-    "sequence_pack": curation.sequence_pack,
-    "dedup_minhash_incremental": dedup.dedup_minhash_incremental,
-    "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
-    "dedup_components": dedup.dedup_components,
-    "dedup_simhash": dedup.dedup_simhash,
-    "knn_brute_force": similarity.knn_brute_force,
-    "knn_lsh": similarity.knn_lsh,
-    "knn_ivf": similarity.knn_ivf,
-    "quality_score": quality.quality_score,
-    "token_count": quality.token_count,
-    "fingerprint": quality.fingerprint,
-    "dedup_embedding_lsh": dedup.dedup_embedding_lsh,
-    "dedup_embedding_incremental": dedup.dedup_embedding_incremental,
-    "dedup_embedding_ivf": dedup.dedup_embedding_ivf,
-    "asof_join": relational_ext.asof_purchase_attribution,
-    "range_join_bursts": relational_ext.error_bursts,
-    "orders_rollup": relational_ext.orders_rollup,
-    "events_cube": relational_ext.events_cube,
-    "lineitem_stats": relational_ext.lineitem_stats,
-    "sliding_window": relational_ext.event_count_sliding,
-    "session_window": relational_ext.user_sessions,
-    "curated_corpus": relational_ext.curated_corpus,
-    "anti_join": analytics_ext.customers_without_orders,
-    "full_outer_daily": analytics_ext.daily_activity_full,
-    "grouping_sets": analytics_ext.orders_grouping_sets,
-    "window_timeline": analytics_ext.customer_order_timeline,
-    "spend_quartiles": analytics_ext.customer_spend_quartiles,
-    "pivot_matrix": analytics_ext.user_event_matrix,
-    "json_props_stats": analytics_ext.json_props_stats,
-    "event_reach": analytics_ext.event_reach,
-    "event_reach_approx": analytics_ext.event_reach_approx,
-    "hash_sample": curation.hash_sample,
-    "source_mix": curation.source_mix,
-    "temperature_mix": curation.temperature_mix,
-    "shard_pack": curation.shard_pack,
-    "distinct_users_by_type": scale.distinct_users_by_type,
-    "skewed_join_enrich": scale.skewed_join_enrich,
-    "chunk_documents": curation.chunk_documents,
-    "quality_quantile_filter": quality.quality_quantile_filter,
-    "corpus_stats_by_source": quality.corpus_stats_by_source,
-    "repetition_score": quality.repetition_score,
-    "unigram_logprob": quality.unigram_logprob,
-    "benchmark_contamination": quality.benchmark_contamination,
-    # Round-5 additions: the rest of the registry (every driver-contract
-    # query is now benched EXCEPT dedup_embedding_cosine, the O(n^2)
-    # correctness twin of the LSH/IVF paths — quadratic by design, not a
-    # perf surface).
-    "next_word_after": text_analytics.next_word_after,
-    "boolean_and": inverted_index.boolean_and,
-    "boolean_or": inverted_index.boolean_or,
-    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-    "simhash_fingerprints": dedup.simhash_fingerprints,
-    # Round-6 addition: alternating-star components (the 100 TB clustering
-    # path), gated alongside its propagation twin this round.
-    "dedup_star_components": dedup.dedup_star_components,
-    # Round-6 additions: distributed Lloyd k-means + cluster-balanced
-    # sampling, stopword cleaning, PII redaction.
-    "kmeans_clusters": similarity.kmeans_clusters,
-    "cluster_balanced_sample": similarity.cluster_balanced_sample,
-    "knn_ivf_trained": similarity.knn_ivf_trained,
-    "text_clean": quality.text_clean,
-    "pii_redaction": quality.pii_redaction,
-    "ivf_assignments": similarity.ivf_assignments,
-    "lang_id": quality.lang_id,
-    "top_orders_per_priority": relational_ext.top_orders_per_priority,
-    "never_ordered_parts": analytics_ext.never_ordered_parts,
-    "multimodal_meta": multimodal.multimodal_meta,
-    "image_features": multimodal.image_features_checked,
-    "video_frame_sample": multimodal.frame_sample_checked,
-    "stratified_sample": curation.stratified_sample,
-    "sgd_train": spam.sgd_train,
-    "sgd_score": spam.sgd_score,
-    # Round-6 additions: BM25 ranked retrieval, C4-style span dedup, and
-    # the event conversion funnel.
-    "ranked_retrieval_bm25": inverted_index.ranked_retrieval_bm25,
-    "span_dedup": dedup.span_dedup,
-    "event_funnel": analytics_ext.event_funnel,
-    "semantic_dedup": dedup.semantic_dedup,
-    "dsir_weights": quality.dsir_weights,
-    "hybrid_retrieval": inverted_index.hybrid_retrieval,
-    "triangle_count": pagerank.triangle_count,
-    "user_value_moving_avg": relational_ext.user_value_moving_avg,
-    "bigram_logprob": quality.bigram_logprob,
-    # Round-6 additions, batch 4: cohort retention, per-user anomaly days,
-    # per-doc tf-idf keywords, 2-core of the near-dup graph, int8 ANN.
-    "retention_cohorts": analytics_ext.retention_cohorts,
-    "user_activity_anomalies": analytics_ext.user_activity_anomalies,
-    "keyword_extraction": text_analytics.keyword_extraction,
-    "kcore_subgraph": pagerank.kcore_subgraph,
-    "knn_int8": similarity.knn_int8,
-    "pq_codes": similarity.pq_codes,
-    "knn_pq": similarity.knn_pq,
-    "knn_pq_rerank": similarity.knn_pq_rerank,
-    "ann_pq_incremental": similarity.ann_pq_incremental,
-    "knn_ivfpq": similarity.knn_ivfpq,
-    "knn_join_pq": similarity.knn_join_pq,
-    "order_fulfillment_percentiles": relational_ext.order_fulfillment_percentiles,
-    "session_paths": relational_ext.session_paths,
-    "cross_source_leakage": dedup.cross_source_leakage,
-    "vocab_coverage": quality.vocab_coverage,
-    "event_value_histogram": analytics_ext.event_value_histogram,
-    "priority_sample": curation.priority_sample,
-    "online_user_anomalies": streaming_anomaly.online_user_anomalies,
-    "label_centroids": similarity.label_centroids,
-    "nearest_centroid_confusion": similarity.nearest_centroid_confusion,
-    "part_affinity": analytics_ext.part_affinity,
-    "integrity_audit": analytics_ext.integrity_audit,
-    "fuzzy_name_matches": analytics_ext.fuzzy_name_matches,
-    "snapshot_diff": analytics_ext.snapshot_diff,
-    "scd2_history": analytics_ext.scd2_history,
-    "events_gapfill_locf": analytics_ext.events_gapfill_locf,
-    "q5": sql_analytics.q5_local_supplier_volume,
-    "batch_gd_train": spam.batch_gd_train,
-    "batch_gd_score": spam.batch_gd_score,
-    "dau_wau_stickiness": analytics_ext.dau_wau_stickiness,
-    "customer_cohort_ltv": analytics_ext.customer_cohort_ltv,
-    "fulfillment_pct_approx": relational_ext.order_fulfillment_percentiles_approx,
-    "index_merge_incremental": inverted_index.index_merge_incremental,
-    "weekly_reach_sketches": analytics_ext.weekly_reach_from_sketches,
-    "lpa_communities": pagerank.label_propagation_communities,
-    "boolean_and_not": inverted_index.boolean_and_not,
-    "phrase_search": inverted_index.phrase_search,
-    "q6": sql_analytics.q6_forecast_revenue,
-    "priority_revenue_share": relational_ext.priority_revenue_share,
-    # Round-7 additions: exact embedding covariance (Arrow gram pass),
-    # deterministic epoch shuffle, TPC-H Q7-shaped cross-border volume.
-    "embedding_covariance": similarity.embedding_covariance,
-    "corpus_shuffle": curation.corpus_shuffle,
-    "q7": sql_analytics.q7_volume_shipping,
-    "bpe_merges": text_analytics.bpe_merges,
-    "q8": sql_analytics.q8_market_share,
-    "q1_pricing": sql_analytics.q1_pricing_summary,
-    "q10": sql_analytics.q10_returned_items,
-    "q19": sql_analytics.q19_discounted_revenue,
-    # Round-8 additions: the REAL TPC-H Q3 (date-disjoint fact-fact join +
-    # top-k) and Q14 (conditional aggregation over a fact⋈dim join).
-    "q3_real": sql_analytics.q3_shipping_priority,
-    "q14": sql_analytics.q14_promo_revenue,
-    "q18": sql_analytics.q18_large_volume_customers,
-    "q4_priority": sql_analytics.q4_order_priority_checking,
-    # Round-8: REAL stdlib codec paths (WAV container + PNG bitstream,
-    # encode->decode->aggregate inside chained mapInPandas, no shuffle).
-    "audio_wav_features": multimodal.audio_wav_features,
-    "audio_spectral_features": multimodal.audio_spectral_features,
-    "image_png_features": multimodal.image_png_features,
-    "image_jpeg_features": multimodal.image_jpeg_features,
-    # Round-8: exact-substring duplicate-window detection (Lee et al.)
-    "duplicate_ngram_spans": dedup.duplicate_ngram_spans,
-    "remove_duplicate_spans": dedup.remove_duplicate_spans,
-    "customer_rfm": analytics_ext.customer_rfm,
-    "order_backlog": analytics_ext.order_backlog_timeline,
-    "audience_overlap": analytics_ext.audience_overlap,
-    "dormant_rich": analytics_ext.dormant_rich_customers,
-    "audience_overlap_approx": analytics_ext.audience_overlap_approx,
-    "bpe_vocab": text_analytics.bpe_vocab,
-    "heavy_hitters_cms": text_analytics.heavy_hitters_cms,
-    "pca_variance": similarity.pca_variance,
-    "embedding_outliers": similarity.embedding_outliers,
-    # The artifact-sharing pipeline, reported as SEPARATE lines (r7 judge
-    # item 8 — the old single `materialized_suite` aggregate obscured
-    # per-consumer regressions; BASELINE.md maps old onto new): one
-    # artifact build (pair graph + centroids + component closure, timed
-    # fresh) + the consumers reading the stored artifacts. Compare mat_*
-    # against the in-plan forms (triangle_count, kcore_subgraph,
-    # cross_source_leakage, semantic_dedup, knn_ivf_trained,
-    # dedup_keep_canonical, leakage_safe_split) to read the recompute
-    # saved.
+# The artifact-sharing pipeline's bench-only lines (plans/materialize.py):
+# artifact builds, timed fresh, and the consumers reading the stored
+# artifacts.  Compare each consumer against its in-plan registry twin
+# (triangle_count, kcore_subgraph, cross_source_leakage, semantic_dedup,
+# knn_ivf_trained, dedup_keep_canonical, leakage_safe_split,
+# manifest_ingest_delta, knn_pq, ann_pq_incremental, knn_join_pq) to read
+# the recompute saved.  The registered mat_* queries are benched through
+# the registry.
+ARTIFACT_LINES = {
     "mat_artifact_build": materialize.bench_artifact_build,
     "mat_triangle_count": materialize.bench_triangle_count,
     "mat_kcore_subgraph": materialize.bench_kcore_subgraph,
     "mat_cross_source_leakage": materialize.bench_cross_source_leakage,
     "mat_semantic_dedup": materialize.bench_semantic_dedup,
     "mat_knn_ivf_trained": materialize.bench_knn_ivf_trained,
-    # Round-11: the component-closure artifact consumers — survivor
-    # selection and the leakage-safe split read the stored closure, so
-    # each is one corpus × tiny left join (no MinHash pass, no
-    # propagation rounds per run).
     "mat_dedup_keep_canonical": materialize.bench_dedup_keep_canonical,
     "mat_leakage_safe_split": materialize.bench_leakage_safe_split,
-    "mat_dedup_keep_best": materialize.bench_dedup_keep_best,
-    "mat_training_manifest": materialize.bench_training_manifest,
     "mat_manifest_ingest_delta": materialize.bench_manifest_ingest_delta,
-    "mat_manifest_compact": materialize.bench_manifest_compact,
-    # Round-10: the PQ index as a stored artifact — build once (encode
-    # scan + codebook write), then ADC searches read 8 bytes/vector from
-    # the store. Compare mat_knn_pq against the in-plan knn_pq line to
-    # read the per-search encode recompute saved.
     "mat_pq_build": materialize.bench_pq_build,
     "mat_knn_pq": materialize.bench_knn_pq_stored,
-    "mat_knn_ivfpq": materialize.bench_knn_ivfpq_stored,
-    # Round-11: the ingest-ANN shapes over the stored index — the delta
-    # joins 8-byte stored codes instead of re-encoding the corpus per
-    # run. Compare against the in-plan ann_pq_incremental / knn_join_pq
-    # lines to read the amortized encode.
     "mat_ann_pq_incremental": materialize.bench_ann_pq_incremental_stored,
     "mat_knn_join_pq": materialize.bench_knn_join_pq_stored,
-    # Round-8 (session 2): the five remaining classic TPC-H shapes the
-    # synthetic schema supports — outer-join histogram (Q13), correlated
-    # scalar-avg subquery (Q17), max-over-view (Q15), HAVING-vs-global-
-    # scalar (Q11 shape), grouped count-distinct + NOT IN (Q16 shape).
-    "q13": sql_analytics.q13_customer_distribution,
-    "q17": sql_analytics.q17_small_quantity_revenue,
-    "q15": sql_analytics.q15_top_supplier,
-    "q11": sql_analytics.q11_important_parts,
-    "q16": sql_analytics.q16_supplier_part_variety,
-    # Round-8 (session 7): the last five TPC-H shapes — with these every
-    # one of Q1-Q22 has an engine adaptation (Q22 = dormant_rich_customers).
-    # Multi-dim profit rollup (Q9), late-shipment conditional counts (Q12),
-    # derived-catalog correlated min (Q2), dominance semi-join (Q20),
-    # EXISTS/NOT-EXISTS waiting-supplier count (Q21).
-    "q9": sql_analytics.q9_product_type_profit,
-    "q12": sql_analytics.q12_late_priority_lines,
-    "q20": sql_analytics.q20_potential_promotion,
-    "q21": sql_analytics.q21_waiting_suppliers,
-    "q2_min_cost": sql_analytics.q2_min_cost_supplier,
+}
+
+# Every registered query under its registry name, plus the artifact lines.
+# dedup_embedding_cosine is the one registered query not benched: the
+# O(n^2) correctness twin of the LSH/IVF paths, quadratic by design.
+HEADLINE = {
+    **{
+        name: fn
+        for name, fn in registry.queries().items()
+        if name != "dedup_embedding_cosine"
+    },
+    **ARTIFACT_LINES,
 }
 
 
@@ -289,23 +64,53 @@ HEADLINE = {
 # (27.7-32.1 s at sf0.1) were measured over exactly these 45.
 BASELINE_QUERIES = frozenset(
     {
-        "q1", "q2", "q3", "q4", "word_count", "bigram_relfreq", "pmi_pairs",
-        "inverted_index", "boolean_mixed", "spam_score", "spam_ensemble",
-        "pagerank", "event_count_hourly", "region_event_count",
-        "trending_events", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-        "knn_brute_force", "knn_lsh", "knn_ivf", "quality_score",
-        "token_count", "fingerprint", "dedup_embedding_lsh", "asof_join",
-        "range_join_bursts", "orders_rollup", "events_cube", "lineitem_stats",
-        "sliding_window", "session_window", "curated_corpus", "anti_join",
-        "full_outer_daily", "grouping_sets", "window_timeline",
-        "spend_quartiles", "pivot_matrix", "json_props_stats", "event_reach",
-        "event_reach_approx", "hash_sample", "source_mix", "shard_pack",
+        "q1_count_shipped", "q2_orders_shipped", "q3_part_supplier_shipped",
+        "q4_orders_by_nation", "word_count", "bigram_relative_frequency",
+        "pmi_pairs", "inverted_index", "boolean_mixed", "spam_score",
+        "spam_ensemble", "pagerank_top20", "event_count_hourly",
+        "region_event_count", "trending_events", "dedup_exact",
+        "dedup_minhash_lsh", "dedup_simhash", "knn_brute_force", "knn_lsh",
+        "knn_ivf", "quality_score", "token_count", "fingerprint",
+        "dedup_embedding_lsh", "asof_purchase_attribution", "error_bursts",
+        "orders_rollup", "events_cube", "lineitem_stats",
+        "event_count_sliding", "user_sessions", "curated_corpus",
+        "customers_without_orders", "daily_activity_full",
+        "orders_grouping_sets", "customer_order_timeline",
+        "customer_spend_quartiles", "user_event_matrix", "json_props_stats",
+        "event_reach", "event_reach_approx", "hash_sample", "source_mix",
+        "shard_pack",
     }
+)
+
+# Burn-in: JVM + codegen + parquet footer caches.  ONE warmup query is not
+# enough — the JIT keeps compiling shared operator code paths (parquet scan,
+# hash agg, shuffle, broadcast) for dozens of stage executions, so with a
+# single warmup the first timed sweep slots absorb start-up cost later slots
+# don't: the r5 driver run showed q1_count_shipped/q2_orders_shipped (slots
+# 1-2) at 4.9x/2.6x their baselines with untouched plans while the q3/q4
+# lines on the same tables sat at ~1x (adjudicated r6 by same-session
+# interleaved trials, BASELINE.md r6 note: 2.62 s first-slot vs 0.33-0.90 s
+# once warm).  Two untimed rounds over five plan shapes (scan+filter+count,
+# shuffle join+sort, broadcast dim chain, join+agg, text explode+agg) warm
+# the shared paths before anything is timed.
+BURN_IN = (
+    "q1_count_shipped",
+    "q2_orders_shipped",
+    "q3_part_supplier_shipped",
+    "q4_orders_by_nation",
+    "word_count",
 )
 
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def burn_in(spark, sf_dir: str) -> None:
+    """Two untimed rounds over the BURN_IN plan shapes."""
+    for _ in range(2):
+        for name in BURN_IN:
+            force(HEADLINE[name](spark, sf_dir))
 
 
 # Interleaved trials for the BASELINE_QUERIES subset (r11 verdict item 1:
@@ -484,27 +289,7 @@ def main() -> None:
     spark = build_spark(app_name="bdts-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Burn-in: JVM + codegen + parquet footer caches. ONE warmup query is
-    # not enough — the JIT keeps compiling shared operator code paths
-    # (parquet scan, hash agg, shuffle, broadcast) for dozens of stage
-    # executions, so with a single warmup the first timed sweep slots
-    # absorb start-up cost later slots don't: the r5 driver run showed
-    # q1/q2 (slots 1-2) at 4.9x/2.6x their baselines with untouched plans
-    # while q3/q4 on the same tables sat at ~1x. Adjudicated r6 by
-    # same-session interleaved trials (BASELINE.md r6 note): q1 first-slot
-    # 2.62 s vs 0.33-0.90 s once warm — pure warmup artifact. Two untimed
-    # rounds over five plan shapes (scan+filter+count, shuffle join+sort,
-    # broadcast dim chain, join+agg, text explode+agg) warm the shared
-    # paths before anything is timed.
-    for _ in range(2):
-        for warm_fn in (
-            sql_analytics.q1_count_shipped,
-            sql_analytics.q2_orders_shipped,
-            sql_analytics.q3_part_supplier_shipped,
-            sql_analytics.q4_orders_by_nation,
-            text_analytics.word_count,
-        ):
-            force(warm_fn(spark, sf_dir))
+    burn_in(spark, sf_dir)
 
     timings, errors = time_queries(spark, sf_dir, HEADLINE)
 

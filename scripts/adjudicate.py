@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Generic same-session interleaved-trials adjudicator (BASELINE.md r5
-protocol, generalized from adjudicate_q1q2.py).
+"""Generic same-session interleaved-trials adjudicator (the BASELINE.md r5
+protocol, run over any set of bench lines).
 
 When a driver bench line regresses vs the previous round with untouched
 plans, the question is "real plan regression or machine/bench drift?".
@@ -17,10 +17,11 @@ noise, record in BASELINE.md) or near the regressed number (real — go
 profile the plan).
 
 Usage:
-    python scripts/adjudicate.py lpa_communities batch_gd_train ...
+    python scripts/adjudicate.py label_propagation_communities batch_gd_train ...
     python scripts/adjudicate.py --trials 5 --sf-dir /root/testdata/sf0.1 ...
 
-Names are bench.py HEADLINE keys.
+Names are bench.py HEADLINE keys (registry names, plus the mat_* artifact
+lines).
 """
 
 from __future__ import annotations
@@ -35,10 +36,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from big_data_toolkit_spark.operators import (  # noqa: E402
-    sql_analytics,
-    text_analytics,
-)
 from big_data_toolkit_spark.session import build_spark  # noqa: E402
 
 
@@ -61,15 +58,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Phase A — bench.py's exact burn-in.
-    for _ in range(2):
-        for warm_fn in (
-            sql_analytics.q1_count_shipped,
-            sql_analytics.q2_orders_shipped,
-            sql_analytics.q3_part_supplier_shipped,
-            sql_analytics.q4_orders_by_nation,
-            text_analytics.word_count,
-        ):
-            bench.force(warm_fn(spark, args.sf_dir))
+    bench.burn_in(spark, args.sf_dir)
     # Plus one untimed pass of each adjudicated query itself, matching the
     # per-plan warmup the driver sweep gives every timed slot.
     for name in args.names:

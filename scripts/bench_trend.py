@@ -7,7 +7,7 @@ prints, for the two newest rounds, every query's r(N-1) -> r(N) ratio,
 flagging movers beyond the threshold (default 1.5x either way). Machine
 drift between rounds is +/-20-50% on identical code (BASELINE.md), so a
 flag here is a *question*, not a verdict — settle it with same-session
-interleaved trials (the dedup_simhash / q1-q2 protocol) before touching
+interleaved trials (scripts/adjudicate.py) before touching
 any plan.
 
 Usage:
@@ -26,19 +26,22 @@ import re
 import sys
 
 
-def bench_registry_keys(repo_root: str) -> set[str]:
-    """Bench query names, read TEXTUALLY from bench.py's dict literals
-    (importing bench would pull the whole pyspark chain)."""
-    try:
-        with open(os.path.join(repo_root, "bench.py")) as fh:
-            src = fh.read()
-    except OSError:
-        return set()
-    return set(re.findall(r'^\s{4}"([a-z0-9_]+)":', src, re.M))
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Summary fields of a bench line that share the per-query "name": sec form.
+_META_KEYS = ("value", "baseline_subset_seconds", "total_seconds")
+
+
+def bench_registry_keys() -> set[str]:
+    """The live bench line names: bench.HEADLINE's keys."""
+    sys.path.insert(0, _REPO_ROOT)
+    import bench
+
+    return set(bench.HEADLINE)
 
 
 def load_rounds(repo_root: str) -> dict[int, dict[str, float]]:
-    valid_keys = bench_registry_keys(repo_root)
+    valid_keys = bench_registry_keys()
     rounds: dict[int, dict[str, float]] = {}
     for path in sorted(glob.glob(os.path.join(repo_root, "BENCH_r*.json"))):
         m = re.search(r"BENCH_r(\d+)\.json$", path)
@@ -53,29 +56,17 @@ def load_rounds(repo_root: str) -> dict[int, dict[str, float]]:
             # line LAST (so the governing numbers survive tail truncation);
             # if the driver parsed the summary line, recover per-query
             # times from the captured tail text instead.  The tail is
-            # FRONT-truncated, so the first match may be a chopped key
-            # ("rpus_shuffle" from "corpus_shuffle"): keep only keys in
-            # the live bench registry (plus historical ones no longer
-            # registered — those appear in some fully-parsed round).
-            pairs = {
-                k: float(v)
-                for k, v in re.findall(
-                    r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)', data["tail"]
-                )
-            }
-            known = valid_keys | {
-                q for r in rounds.values() for q in r
-            }
+            # FRONT-truncated, so its first key may be chopped
+            # ("rpus_shuffle" from "corpus_shuffle"): keep that one only if
+            # it is a live bench name or appears in an earlier round.
+            pairs = re.findall(
+                r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)', data["tail"]
+            )
+            known = valid_keys | {q for r in rounds.values() for q in r}
+            if pairs and pairs[0][0] not in known:
+                pairs = pairs[1:]
             queries = {
-                k: v
-                for k, v in pairs.items()
-                if k in known
-                and k
-                not in (
-                    "value",
-                    "baseline_subset_seconds",
-                    "total_seconds",
-                )
+                k: float(v) for k, v in pairs if k not in _META_KEYS
             } or None
         if queries:
             rounds[int(m.group(1))] = queries
@@ -86,8 +77,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--threshold", type=float, default=1.5)
     ap.add_argument("--all", action="store_true", help="full history table")
-    ap.add_argument("--repo-root", default=os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
+    ap.add_argument("--repo-root", default=_REPO_ROOT)
     args = ap.parse_args()
 
     rounds = load_rounds(args.repo_root)

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Compute the NEXT round's gate head (50) from recorded evidence — the
-generalization of plan_r8.py, usable every round:
+"""Compute the NEXT round's gate head (50) from recorded evidence, every
+round:
 
 priority order
   1. red rows in the NEWEST CORRECTNESS file (fix + retry first),

@@ -4,6 +4,7 @@ query (round 3 lost its entire bench to a single unhandled failure)."""
 from __future__ import annotations
 
 import bench
+from big_data_toolkit_spark import registry
 
 
 def test_time_queries_isolates_failures(spark):
@@ -34,6 +35,17 @@ def test_time_queries_isolates_failures(spark):
 def test_headline_covers_baseline_subset():
     missing = bench.BASELINE_QUERIES - set(bench.HEADLINE)
     assert not missing, f"baseline queries missing from HEADLINE: {missing}"
+    assert len(bench.BASELINE_QUERIES) == 45
+    # Every bench line is named by its registry key, apart from the 13
+    # bench-only artifact lines; a private alias fails here.
+    registered = registry.queries()
+    assert len(bench.ARTIFACT_LINES) == 13
+    assert all(k.startswith("mat_") for k in bench.ARTIFACT_LINES)
+    assert set(bench.HEADLINE) <= set(registered) | set(bench.ARTIFACT_LINES)
+    # Every registered query is benched, except the quadratic twin.
+    assert set(registered) - set(bench.HEADLINE) == {"dedup_embedding_cosine"}
+    for name, fn in bench.HEADLINE.items():
+        assert fn is registered.get(name, bench.ARTIFACT_LINES.get(name))
 
 
 def test_baseline_retrials_medians(spark, monkeypatch):
@@ -70,7 +82,7 @@ def test_baseline_retrials_skips_sweep_errors(spark):
         return s.range(1)
 
     medians, trials, retrial_errors = bench.baseline_retrials(
-        spark, "unused", {"q1": fn}, {}, n_trials=3
+        spark, "unused", {"q1_count_shipped": fn}, {}, n_trials=3
     )
     assert medians == {} and trials == {} and retrial_errors == {}
 
@@ -99,13 +111,15 @@ def test_flag_tail_lines_protocol():
     """r12 verdict item 1: only non-baseline lines that exceed BOTH the
     ratio and the absolute floor against a recorded prior are flagged."""
     sweep = {
-        "q1": 9.0,          # baseline member — median-protected, never flagged
+        "q1_count_shipped": 9.0,  # baseline member — never flagged
         "slow": 3.0,        # 3x prior, +2.0s  -> flagged
         "tiny": 0.06,       # 3x prior but +0.04s, under floor -> noise
         "steady": 1.01,     # ~1x prior -> clean
         "brand_new": 5.0,   # no prior -> nothing to compare
     }
-    prior = {"q1": 1.0, "slow": 1.0, "tiny": 0.02, "steady": 1.0}
+    prior = {
+        "q1_count_shipped": 1.0, "slow": 1.0, "tiny": 0.02, "steady": 1.0,
+    }
     flagged = bench.flag_tail_lines(sweep, prior)
     assert flagged == {"slow": 3.0}
 
@@ -119,3 +133,29 @@ def test_load_prior_timings_degrades_to_empty(tmp_path):
     ok = tmp_path / "ok.json"
     ok.write_text('{"queries": {"a": 1.5, "b": "err"}}')
     assert bench.load_prior_timings(str(ok)) == {"a": 1.5}
+
+
+def test_bench_trend_drops_truncated_tail_key(tmp_path):
+    """A driver artifact's tail is front-truncated: its first key may be a
+    chopped bench name, which is dropped; a registry name is kept."""
+    import importlib
+    import json
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"),
+    )
+    bench_trend = importlib.import_module("bench_trend")
+
+    (tmp_path / "BENCH_r01.json").write_text(json.dumps(
+        {"tail": '"rpus_shuffle": 0.5, "corpus_shuffle": 0.7, "value": 1.2'}
+    ))
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps(
+        {"tail": '"q1_count_shipped": 0.3, "corpus_shuffle": 0.6'}
+    ))
+    assert bench_trend.load_rounds(str(tmp_path)) == {
+        1: {"corpus_shuffle": 0.7},
+        2: {"q1_count_shipped": 0.3, "corpus_shuffle": 0.6},
+    }
