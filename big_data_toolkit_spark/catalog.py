@@ -8,6 +8,14 @@ their self-describing parquet schemas, so every operator can be written either
 as DataFrame code or ``spark.sql`` — which is also what lets the DuckDB oracle
 run the identical statement.
 
+Like a metastore, the catalog serves each table's schema from metadata
+instead of rediscovering it on every query. ``spark.read.parquet`` infers the
+schema with a Spark job that reads the parquet footers; ``load_table`` runs
+that inference once per file fingerprint (path, and each file's name, inode,
+size and mtime) and session inference settings, then reads with the cached
+schema, so a repeat read of an unchanged table plans with no Spark job. This
+is the schema analogue of ``table_row_count``'s footer statistics.
+
 Scale note: ``spark.read.parquet`` on a directory of files partitions by
 row-group/128 MB splits automatically; at 100 TB the same call distributes the
 scan across the cluster, and filters/projections written against these views
@@ -19,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -36,8 +45,38 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session confs that change what parquet schema inference returns; their
+# values are part of the schema cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (abs path, inference conf values) -> (file fingerprint, inferred schema).
+# One entry per table path and settings, replaced when the files change.
+# Two threads loading one table at once may both infer; either result is
+# the same schema.
+_SCHEMAS: dict[tuple, tuple[list, StructType]] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _table_files(path: str) -> list[str]:
+    """The parquet files of one table: the path itself, or every
+    ``*.parquet`` under it when it is a directory."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    )
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
@@ -51,21 +90,45 @@ def table_row_count(sf_dir: str, name: str) -> int:
     would dominate the operator's own work."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    else:
-        files = [path]
+    files = _table_files(table_path(sf_dir, name))
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    files or the session's inference confs changed since the last read.
+
+    Schema inference is Spark's own (a footer-reading job); later reads
+    pass the cached schema, which skips that job. A file rewritten in place
+    changes its inode, size or mtime, so it is inferred again."""
+    try:
+        fingerprint = []
+        for f in _table_files(path):
+            st = os.stat(f)
+            fingerprint.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    except OSError:
+        # not a local path: nothing to fingerprint, and a missing table
+        # keeps Spark's own PATH_NOT_FOUND error
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == fingerprint:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one TESTDATA table as a DataFrame.
+
+    The schema is inferred once per file fingerprint and inference confs
+    (``_read_parquet``); a repeat load of an unchanged table starts no
+    Spark job, the metastore analogue of ``table_row_count``'s footer
+    statistics.
 
     ``events.ts`` has been written by different fixture generations as either
     parquet TIMESTAMP(NANOS) — which Spark's vectorized reader rejects unless
@@ -102,7 +165,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            df = spark.read.parquet(table_path(sf_dir, name))
+            df = _read_parquet(spark, table_path(sf_dir, name))
             ts_type = df.schema["ts"].dataType
             if isinstance(ts_type, T.LongType):
                 # nanos fixture: integer `div` — double division would lose
@@ -132,7 +195,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:

@@ -107,6 +107,21 @@ def spark():
     spark.stop()
 
 
+def jobs_started(spark, fn):
+    """Call ``fn()``; return its result and the number of Spark jobs it
+    started (the statusTracker job-id delta). The listener bus is drained
+    before each read, so no job event is still in flight."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = job_ids()
+    result = fn()
+    return result, len(job_ids() - before)
+
+
 @contextlib.contextmanager
 def rocksdb_state_store(spark):
     """transformWithState requires a state store with multiple column

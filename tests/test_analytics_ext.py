@@ -4,7 +4,7 @@ import pytest
 
 from big_data_toolkit_spark.operators import analytics_ext as ax
 from pyspark.sql import functions as F
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, jobs_started
 from tests.oracle_utils import compare
 
 ORACLE_NAMES = sorted(ax.ORACLE_SQL)
@@ -442,6 +442,16 @@ def test_dormant_rich_customers_reconciles(spark):
         for r in ax.dormant_rich_customers(spark, SF_SMOKE).collect()
     }
     assert got == want and got
+
+
+def test_dormant_rich_customers_warm_build_starts_no_job(spark):
+    """Job budget: after one warm-up call, building the Q22 plan starts no
+    Spark job (catalog schemas are cached)."""
+    ax.dormant_rich_customers(spark, SF_SMOKE)
+    _, jobs = jobs_started(
+        spark, lambda: ax.dormant_rich_customers(spark, SF_SMOKE)
+    )
+    assert jobs == 0
 
 
 def test_scd2_history_consistent_with_diff(spark):

@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import types as T
 
 from big_data_toolkit_spark.catalog import load_table
+from tests.conftest import jobs_started
 
 INSTANTS = [
     dt.datetime(2024, 1, 1, 0, 0, 0),
@@ -130,6 +131,86 @@ def test_loader_fails_loud_on_non_utc_session(spark, dual_fixture_dirs):
     # and under the pinned-UTC session the load works and is value-exact
     rows = load_table(spark, micros_dir, "events").orderBy("event_id").collect()
     assert [r["ts"] for r in rows] == INSTANTS
+
+
+def test_repeat_load_starts_no_job(spark, tmp_path):
+    """Schema inference is a footer-reading Spark job; the catalog runs it
+    once per file fingerprint, so a second load of an unchanged table
+    plans with no job and the same schema."""
+    d = str(tmp_path)
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array([1, 2], type=pa.int64())}),
+        os.path.join(d, "lineitem.parquet"),
+    )
+    first, first_jobs = jobs_started(
+        spark, lambda: load_table(spark, d, "lineitem")
+    )
+    second, second_jobs = jobs_started(
+        spark, lambda: load_table(spark, d, "lineitem")
+    )
+    assert first_jobs > 0, "first load must infer the schema"
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    assert sorted(r[0] for r in second.collect()) == [1, 2]
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    """A table rewritten in place at the same path (new size/mtime) must
+    load with its new schema, not the cached one."""
+    d = str(tmp_path)
+    path = os.path.join(d, "lineitem.parquet")
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array([1, 2], type=pa.int64())}), path
+    )
+    assert load_table(spark, d, "lineitem").columns == ["l_orderkey"]
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1, 2], type=pa.int64()),
+                "l_tax": pa.array([0.5, 0.25]),
+            }
+        ),
+        path,
+    )
+    df = load_table(spark, d, "lineitem")
+    assert df.columns == ["l_orderkey", "l_tax"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 0.5), (2, 0.25)]
+
+
+def test_inference_conf_change_is_inferred_again(spark, tmp_path):
+    """The session's parquet inference confs are part of the cache key: a
+    binary column reads as string once binaryAsString is on."""
+    d = str(tmp_path)
+    pq.write_table(
+        pa.table({"l_comment": pa.array([b"x"], type=pa.binary())}),
+        os.path.join(d, "lineitem.parquet"),
+    )
+    key = "spark.sql.parquet.binaryAsString"
+    prior = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "false")
+        plain = load_table(spark, d, "lineitem").schema["l_comment"].dataType
+        spark.conf.set(key, "true")
+        text = load_table(spark, d, "lineitem").schema["l_comment"].dataType
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    assert isinstance(plain, T.BinaryType)
+    assert isinstance(text, T.StringType)
+
+
+def test_repeat_nanos_load_same_rows(spark, dual_fixture_dirs):
+    """The cached schema of the nanos fixture (ts as raw bigint under the
+    scoped nanosAsLong conf) must convert exactly as the first load did."""
+    _, nanos_dir = dual_fixture_dirs
+    loads = [
+        load_table(spark, nanos_dir, "events").orderBy("event_id").collect()
+        for _ in range(2)
+    ]
+    assert loads[0] == loads[1]
+    assert [r["ts"] for r in loads[1]] == INSTANTS
 
 
 def test_local_table_plans_jvm_local_scan(spark):

@@ -5,7 +5,7 @@ import os
 import pytest
 
 from big_data_toolkit_spark.operators import sql_analytics as sa
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, jobs_started
 from tests.oracle_utils import compare
 
 
@@ -13,6 +13,18 @@ from tests.oracle_utils import compare
 def test_oracle_match(spark, name):
     df = sa.QUERIES[name](spark, SF_ORACLE)
     compare(df, sa.ORACLE_SQL[name], SF_ORACLE)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q1_pricing_summary", "q5_local_supplier_volume", "q21_waiting_suppliers"],
+)
+def test_warm_build_starts_no_job(spark, name):
+    """Job budget: after one warm-up call, building these plans starts no
+    Spark job (catalog schemas are cached); all work runs on execution."""
+    sa.QUERIES[name](spark, SF_SMOKE)
+    _, jobs = jobs_started(spark, lambda: sa.QUERIES[name](spark, SF_SMOKE))
+    assert jobs == 0
 
 
 def test_q1_smoke_rows(spark):
